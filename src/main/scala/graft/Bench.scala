@@ -1,4 +1,8 @@
 package graft
+
+import graft.tools.Measure
+import graft.tools.Measure.{median, r3}
+
 object Bench {
   /** Per-query median of `SPARK_GRAFT_BENCH_REPS` (default 3) runs: single
     * measurements on a shared host are ±30%+ noise (docs/NOTES.md), so the
@@ -27,7 +31,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = Engine.localSession(cpus, "graft-bench")
+    val app = "graft-bench"
+    var spark = Engine.localSession(cpus, app)
     // one light session-level warm-up action so the very first warm rep
     // does not absorb classloading + codegen-compiler startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -47,8 +52,10 @@ object Bench {
       while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) sum += t }
       sum
     }
+    // -1 once the context is dead: the failed rep must still be recorded
     def storageMb(): Double =
-      spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1e6
+      try spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1e6
+      catch { case scala.util.control.NonFatal(_) => -1.0 }
     case class Rep(sec: Double, err: Option[String], gcMs: Long, storMb: Double)
     def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
                  name: String): Rep = {
@@ -79,6 +86,9 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
+      // one query's executor OOM kills the shared SparkContext; rebuilding
+      // here lets a fatal query fail only itself, not the rest of the sweep
+      spark = Measure.ensureLive(spark, cpus, app, "bench")
       // localCheckpoint blocks from completed executions used to be
       // reclaimed only when a JVM GC let the ContextCleaner process
       // their weak refs — an ASYNC path the r8 driver bench proved
@@ -92,28 +102,17 @@ object Bench {
       // queries: 5.9 -> 15.9 -> 133 s). Session-lifetime caches
       // (sessionScope ckpts, .persist() frames) survive; the GC nudge
       // stays for what the registry cannot see (shuffle files,
-      // broadcasts, dropped session frames).
-      def release(): Unit = {
-        graft.operators.Checkpoints.releaseQueryScoped(spark)
-        System.gc()
-      }
+      // broadcasts, dropped session frames) — Measure.release.
       val warmRep = timeOnce(fn, name)
-      release()
+      Measure.release(spark, "bench")
       val timed = (1 to reps).map { _ =>
-        val r = timeOnce(fn, name); release(); r
+        val r = timeOnce(fn, name); Measure.release(spark, "bench"); r
       }
       val err = (warmRep.err +: timed.map(_.err)).flatten.headOption
       (name, warmRep, timed, err)
     }
     // a failed query must be distinguishable from a fast one: any failed rep
     // marks the query failed, its reported timing is -1
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def short(name: String): String = name.takeWhile(_ != '_')
     val meds = results.map { case (name, warm, ts, _) =>
       (name, if (ts.exists(_.sec == -1.0) || warm.sec == -1.0) -1.0

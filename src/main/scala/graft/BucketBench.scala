@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-layout head-to-head for the join-transition class (VERDICT
   * r12 item 6): q267/q304/q268 carry sf1 shuffle exponents 2.35–5.60
@@ -12,11 +11,11 @@ import org.apache.spark.sql.functions._
   *
   *  - writes lineitem and orders as tables bucketed on the join key
   *    (same bucket count both sides), timing the one-time write;
-  *  - runs the q267 ship-latency shape (join + support histogram) on
-  *    (a) the plain parquet reads and (b) the bucketed tables,
-  *    interleaved rep by rep (the ScaleBench drift argument), with
-  *    wall / executor-CPU / shuffle-bytes per rep and the physical
-  *    plan's Exchange count per variant;
+  *  - runs q267's own ship-latency chain (Queries.shipLatency: join +
+  *    support histogram) on (a) the plain parquet reads and (b) the
+  *    bucketed tables, interleaved rep by rep (the ScaleBench drift
+  *    argument), with wall / executor-CPU / shuffle-bytes per rep and
+  *    the physical plan's Exchange count per variant;
   *  - prints one JSON line and writes ./BUCKETBENCH.json.
   *
   * The broadcast threshold is DISABLED for the measured join so both
@@ -26,51 +25,12 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_BUCKETS=32 runMain graft.BucketBench <scale>:<dir>
   */
 object BucketBench {
+  import graft.tools.Measure
+  import graft.tools.Measure.{median, r3}
 
-  /** Private copy of ScaleBench's task-level work counters (kept local:
-    * the two mains run in different JVMs and share no session state). */
-  private final class WorkCounters extends org.apache.spark.scheduler.SparkListener {
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        cpuNs.addAndGet(m.executorCpuTime)
-        ()
-      }
-    }
-    def snapshot: (Long, Long, Long) =
-      (shuffleRead.get(), shuffleWrite.get(), cpuNs.get())
-  }
+  private val tag = "bucketbench"
 
-  /** The q267 ship-latency chain over provided frames (same expressions
-    * as Queries.q267ShipLatency — support histogram, exact rank-r
-    * selection off the bounded (priority, days) grid). */
-  private[graft] def shipLatency(li: DataFrame, ord: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val days = datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate")))
-    val hist = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_orderpriority"), days.cast("long").as("days"))
-      .groupBy(col("o_orderpriority"), col("days"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-    val wCum = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("days").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist
-      .withColumn("cum", sum(col("cnt")).over(wCum).cast("long"))
-      .withColumn("n", sum(col("cnt")).over(
-        Window.partitionBy(col("o_orderpriority"))).cast("long"))
-      .groupBy(col("o_orderpriority"))
-      .agg(max(col("n")).cast("long").as("n"),
-        min(when(expr("cum >= (n + 1) DIV 2"), col("days"))).as("med_days"),
-        min(when(expr("cum >= (9 * n + 9) DIV 10"), col("days")))
-          .as("p90_days"))
-  }
-
-  private def exchanges(df: DataFrame): Int = {
+  private def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
     def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
       val through = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -81,7 +41,7 @@ object BucketBench {
       }
       (p +: through.flatMap(walk)) ++ p.subqueries.flatMap(walk)
     }
-    walk(df.queryExecution.executedPlan).count {
+    walk(plan).count {
       case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => true
       case _ => false
     }
@@ -96,8 +56,7 @@ object BucketBench {
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Engine.localSession(cpus, "graft-bucketbench")
-    val work = new WorkCounters
-    spark.sparkContext.addSparkListener(work)
+    val work = Measure.install(spark)
     // both variants must run the identical SMJ algorithm so the delta is
     // the exchanges, not a broadcast-vs-SMJ algorithm change (and at the
     // target scale neither side broadcasts)
@@ -120,26 +79,22 @@ object BucketBench {
       ord.withColumnRenamed("o_orderkey", "k"), "bb_orders", "k", buckets)
     val writeS = (System.nanoTime() - t0) / 1e9
 
-    def plainDf = shipLatency(li, ord)
-    def bucketDf = shipLatency(
+    def plainDf = Queries.shipLatency(li, ord)
+    def bucketDf = Queries.shipLatency(
       spark.table("bb_lineitem").withColumnRenamed("k", "l_orderkey"),
       spark.table("bb_orders").withColumnRenamed("k", "o_orderkey")
         .hint("merge"))
 
-    def drain(): Unit =
-      try org.apache.spark.sql.graft.shim.waitListenerBusEmpty(
-        spark.sparkContext, 10000L)
-      catch { case scala.util.control.NonFatal(_) => () }
     def timeOnce(mk: => DataFrame): (Double, Double, Double) = {
-      graft.operators.Checkpoints.releaseQueryScoped(spark); System.gc()
-      drain()
-      val (r0, w0, c0) = work.snapshot
+      Measure.release(spark, tag)
+      Measure.drain(spark, tag)
+      val w0 = work.snapshot
       val t = System.nanoTime()
       mk.count()
       val wall = (System.nanoTime() - t) / 1e9
-      drain()
-      val (r1, w1, c1) = work.snapshot
-      (wall, ((r1 - r0) + (w1 - w0)) / 1e6, (c1 - c0) / 1e9)
+      Measure.drain(spark, tag)
+      val w = work.snapshot - w0
+      (wall, w.shuffleMb, w.cpuS)
     }
 
     // warm both, then interleave reps (the ScaleBench drift argument)
@@ -150,37 +105,22 @@ object BucketBench {
       plain(r) = timeOnce(plainDf)
       bucket(r) = timeOnce(bucketDf)
     }
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def block(xs: Array[(Double, Double, Double)], ex: Int): String =
-      s"""{"wall_s":${r3(med(xs.map(_._1).toSeq))},""" +
-        s""""shuffle_mb":${r3(med(xs.map(_._2).toSeq))},""" +
-        s""""cpu_s":${r3(med(xs.map(_._3).toSeq))},""" +
+      s"""{"wall_s":${r3(median(xs.map(_._1).toSeq))},""" +
+        s""""shuffle_mb":${r3(median(xs.map(_._2).toSeq))},""" +
+        s""""cpu_s":${r3(median(xs.map(_._3).toSeq))},""" +
         s""""reps_wall":[${xs.map(x => r3(x._1)).mkString(",")}],""" +
         s""""exchanges":$ex}"""
     // exchange counts come from an EXECUTED instance's final adaptive
     // plan (r14, ADVICE r13): counting on a fresh never-run DataFrame
     // reads the initial AQE plan, which can disagree with what the timed
-    // reps actually executed after adaptive rewrites / stage reuse.
-    def exchangesFinal(mk: => DataFrame): Int = {
-      val df = mk
-      // Dataset.count() would execute a DERIVED QueryExecution
-      // (groupBy().count()), leaving df's own AdaptiveSparkPlanExec
-      // un-executed and still reporting the INITIAL plan (ADVICE r14);
-      // foreach runs withAction on df.queryExecution itself.
-      df.foreach(_ => ())
-      exchanges(df)
-    }
+    // reps actually executed after adaptive rewrites / stage reuse. The
+    // chain returns one row per order priority, so collecting is cheap.
     val json =
       s"""{"harness":"bucketbench","sf":$sf,"buckets":$buckets,""" +
         s""""bucket_write_s":${r3(writeS)},""" +
-        s""""plain":${block(plain, exchangesFinal(plainDf))},""" +
-        s""""bucketed":${block(bucket, exchangesFinal(bucketDf))}}"""
+        s""""plain":${block(plain, exchanges(Measure.finalPlan(plainDf)))},""" +
+        s""""bucketed":${block(bucket, exchanges(Measure.finalPlan(bucketDf)))}}"""
     println(json)
     val p = java.nio.file.Paths.get("BUCKETBENCH.json")
     java.nio.file.Files.write(p, json.getBytes("UTF-8"))

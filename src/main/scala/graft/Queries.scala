@@ -925,9 +925,7 @@ object Queries {
   // per (session, sf-dir) — the ivfCache amortization applied to the LSH
   // index — so q111's steady-state cost is the incremental PROBE (the
   // production per-batch shape), with the one-time index build in the
-  // bench's warm rep. Stopped-session entries purged as in ivfCache.
-  private val bucketTableBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Boolean]()
+  // bench's warm rep ([[oncePerSession]]).
 
   def q111NearDedupTable(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
@@ -935,7 +933,7 @@ object Queries {
     val incoming = docs.filter(col("doc_id") % 8 === 4)
       .unionByName(plantedTailDocs(existing, modulus = 40, idOffset = 3000000L))
     val path = rtPath(s, dir, "lshidx")
-    oncePerSession(bucketTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Dedup.writeBucketTable(existing, path, "doc_id", "text",
         shingleK = 3, numHashes = 16, bands = 4, portable = true)
     }
@@ -1705,7 +1703,7 @@ object Queries {
   def q208CovTable(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val path = rtPath(s, dir, "moments")
-    oncePerSession(momentsTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Embeddings.appendMoments(e.filter(col("vec_id") % 2 === 0),
         "embedding", path, batchId = "even")
       Embeddings.appendMoments(e.filter(col("vec_id") % 2 === 1),
@@ -1716,9 +1714,6 @@ object Queries {
     }
     Embeddings.covarianceFromTable(s, path).orderBy("i", "j")
   }
-  private val momentsTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Normalized exact dedup over planted trivial variants (every 5th doc
     * re-keyed +300000, uppercased, punctuation-noised, whitespace-
@@ -1806,16 +1801,13 @@ object Queries {
     * batch-vs-corpus — q111's maintained-index shape on the winnowing
     * rung. Incoming = every 9th-offset-3 docs + planted tails of the
     * existing side (must all surface with overlap ≈ 1). */
-  private val winnowTableBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Boolean]()
-
   def q166WinnowIncr(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val existing = docs.filter(col("doc_id") % 9 === 0)
     val incoming = docs.filter(col("doc_id") % 9 === 3)
       .unionByName(plantedTailDocs(existing, modulus = 45, idOffset = 4000000L))
     val path = rtPath(s, dir, "winnowidx")
-    oncePerSession(winnowTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Winnow.writeFingerprintTable(existing, path, "doc_id", "text",
         k = 8, w = 4, seed = 17)
     }
@@ -2075,9 +2067,6 @@ object Queries {
     * both sides from text, so a green hash proves batch-vs-TABLE ==
     * batch-vs-corpus — q111's maintained-index shape on the CCNet line
     * rung. */
-  private val lineTableBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Boolean]()
-
   def q187LineTable(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val existing = docs.filter(col("doc_id") % 6 === 0)
@@ -2090,7 +2079,7 @@ object Queries {
             concat(col("text"), lit("\n" + footerLines(0))))
           .otherwise(col("text")).as("text"))
     val path = rtPath(s, dir, "linedf")
-    oncePerSession(lineTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Dedup.writeLineDfTable(existing, path, "doc_id", "text")
     }
     Dedup.dropFrequentLinesAgainstTable(incoming, path, "doc_id", "text",
@@ -2565,7 +2554,7 @@ object Queries {
     def occ(m: Int) = docs.filter(col("doc_id") % 2 === m)
       .select(explode(TextOps.tokens(lower(col("text")))).as("token"))
     val path = rtPath(s, dir, "cmsidx")
-    oncePerSession(cmsTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Sketch.appendCmsCounters(occ(0), "token", path, batchId = "even",
         depth = 4, width = 1024, portable = true)
       Sketch.appendCmsCounters(occ(1), "token", path, batchId = "odd",
@@ -2581,9 +2570,6 @@ object Queries {
         depth = 4, width = 1024, portable = true)
       .withColumnRenamed("value", "token")
   }
-  private val cmsTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** PERSISTED HLL register table round trip (Sketch.appendHllRegisters /
     * hllDistinctFromTable): q77's order keys in even/odd batches plus a
@@ -2594,7 +2580,7 @@ object Queries {
   def q211HllTable(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
     val path = rtPath(s, dir, "hllidx")
-    oncePerSession(hllTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Sketch.appendHllRegisters(o.filter(col("o_orderkey") % 2 === 0),
         "o_orderkey", path, batchId = "even", p = 12, portable = true)
       Sketch.appendHllRegisters(o.filter(col("o_orderkey") % 2 === 1),
@@ -2605,9 +2591,6 @@ object Queries {
     }
     Sketch.hllDistinctFromTable(s, path, p = 12)
   }
-  private val hllTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** PERSISTED Bloom bit table round trip (Sketch.appendBloomBits /
     * bloomProbeFromTable): q72's existing-corpus digests split into
@@ -2626,7 +2609,7 @@ object Queries {
     def existing(m: Int) = docs.filter(col("doc_id") % 4 === m)
       .select(md5(col("text")).as("__dg"))
     val path = rtPath(s, dir, "bloomidx")
-    oncePerSession(bloomTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Sketch.appendBloomBits(existing(0), "__dg", path, batchId = "a",
         mBits = 1 << 16, numHashes = 4, portable = true)
       Sketch.appendBloomBits(existing(2), "__dg", path, batchId = "b",
@@ -2644,9 +2627,6 @@ object Queries {
       .select(col("doc_id"), col("maybe_present"))
       .orderBy("doc_id")
   }
-  private val bloomTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** ANALYZE-style column profile of the documents table
     * (Sketch.columnProfile): per column, row/null counts and the
@@ -2678,7 +2658,7 @@ object Queries {
     val docs = t(s, dir, "documents")
     val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
     val path = rtPath(s, dir, "profidx")
-    oncePerSession(profileTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Sketch.appendColumnProfile(docs.filter(col("doc_id") % 2 === 0),
         cols, path, batchId = "even", p = 12, portable = true)
       Sketch.appendColumnProfile(docs.filter(col("doc_id") % 2 === 1),
@@ -2689,9 +2669,6 @@ object Queries {
     }
     Sketch.columnProfileFromTable(s, path, p = 12).orderBy("col_name")
   }
-  private val profileTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Manifest-level file pruning (Versioned.appendWithStats /
     * readPruned): commits are range-clustered on doc_id
@@ -2709,7 +2686,7 @@ object Queries {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     val root = rtPath(s, dir, "statidx")
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    oncePerSession(statsTableBuilt, s, dir) {
+    oncePerSession(s, root) {
       def ranged(f: org.apache.spark.sql.Column) = docs.filter(f)
         .repartitionByRange(2, col("doc_id"))
       // keyed commits: idempotent across JVM reruns on a surviving dir
@@ -2724,9 +2701,6 @@ object Queries {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
       .orderBy("lang", "source")
   }
-  private val statsTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Retention GC as a query surface (Versioned.expire): three commits
     * (even batch, odd batch, compaction), then expire keepLast=2 —
@@ -2737,7 +2711,7 @@ object Queries {
     * and the retention outcome (literal versions 2..3). */
   def q223SnapshotExpire(s: SparkSession, dir: String): DataFrame = {
     val root = rtPath(s, dir, "expiretab")
-    oncePerSession(expireBuilt, s, dir) {
+    oncePerSession(s, root) {
       // expire MUTATES history, so keyed-commit idempotence can't carry
       // a rerun alone: a complete survivor (exactly v2,v3 retained) is
       // reused, anything else — fresh, partial, pre-expire — rebuilds
@@ -2760,9 +2734,6 @@ object Queries {
           min(col("version")).as("oldest_version")))
       .orderBy("lang", "source")
   }
-  private val expireBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Copy-on-write row-level DELETE (Versioned.deleteWhere) over a
     * range-clustered stats table: purge every third doc in the lowest
@@ -2777,7 +2748,7 @@ object Queries {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val root = rtPath(s, dir, "cowdel")
-    oncePerSession(cowDelBuilt, s, dir) {
+    oncePerSession(s, root) {
       // every commit is keyed, so a surviving dir in ANY state
       // self-heals: done commits replay as no-ops, missing ones apply
       def ranged(f: org.apache.spark.sql.Column) = docs.filter(f)
@@ -2796,9 +2767,6 @@ object Queries {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
       .orderBy("lang", "source")
   }
-  private val cowDelBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Copy-on-write MERGE (Versioned.mergeInto): upsert a batch that
     * doubles n_chars for every tenth doc in the lower id half and
@@ -2813,7 +2781,7 @@ object Queries {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val root = rtPath(s, dir, "cowmerge")
-    oncePerSession(cowMergeBuilt, s, dir) {
+    oncePerSession(s, root) {
       def ranged(f: org.apache.spark.sql.Column) = docs.filter(f)
         .repartitionByRange(2, col("doc_id"))
       graft.etl.Versioned.appendWithStats(
@@ -2834,9 +2802,6 @@ object Queries {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
       .orderBy("lang", "source")
   }
-  private val cowMergeBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** CLUSTERED rewrite (Versioned.compact with clusterBy — the
     * OPTIMIZE ... CLUSTER BY story): two ingest-ordered appends arrive
@@ -2852,7 +2817,7 @@ object Queries {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val root = rtPath(s, dir, "clusterrw")
-    oncePerSession(clusterRwBuilt, s, dir) {
+    oncePerSession(s, root) {
       // the appends are UNKEYED by design (stats-free ingest commits),
       // so any survivor that isn't the complete v1..v3 build is wiped
       if (graft.etl.Versioned.versions(root) != Seq(1L, 2L, 3L)) {
@@ -2869,9 +2834,6 @@ object Queries {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
       .orderBy("lang", "source")
   }
-  private val clusterRwBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** BM25 from the PERSISTED inverted index (Rank.appendPostings /
     * bm25FromIndex): postings with denormalized doc lengths appended in
@@ -2884,7 +2846,7 @@ object Queries {
   def q228Bm25Index(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val path = rtPath(s, dir, "bm25idx")
-    oncePerSession(bm25IdxBuilt, s, dir) {
+    oncePerSession(s, path) {
       // plain parquet appends (not commit-keyed): a surviving table's
       // re-appends land as duplicate batch_ids and the read side dedups
       Rank.appendPostings(docs.filter(col("doc_id") % 2 === 0),
@@ -2898,9 +2860,6 @@ object Queries {
     Rank.bm25FromIndex(s, path, Seq("spark", "vector", "query"), topK = 20)
       .orderBy("rank")
   }
-  private val bm25IdxBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** OHLC downsampling: per (day, event_type) the open/high/low/close
     * of the value stream — min_by/max_by on the (ts, event_id) struct
@@ -3919,7 +3878,7 @@ object Queries {
     val sums = Map("n_chars" -> "sum_chars")
     val mins = Map("doc_id" -> "min_id")
     val maxes = Map("doc_id" -> "max_id")
-    oncePerSession(rollupTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Rollup.appendRollup(docs.filter(col("doc_id") % 2 === 0), keys,
         "n_docs", sums, mins, maxes, path, batchId = "even")
       Rollup.appendRollup(docs.filter(col("doc_id") % 2 === 1), keys,
@@ -3934,9 +3893,6 @@ object Queries {
         col("min_id"), col("max_id"))
       .orderBy("lang", "source")
   }
-  private val rollupTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Maximum drawdown per user over the signed running balance
     * (purchases/signups credit, clicks/views/errors debit — exact
@@ -3973,15 +3929,20 @@ object Queries {
     * One fact-dim join (orders broadcast-scale relative to lineitem at
     * any SF ratio — 4:1 rows here, dims prune first at 100 TB) and one
     * priority-keyed window. */
-  def q267ShipLatency(s: SparkSession, dir: String): DataFrame = {
+  def q267ShipLatency(s: SparkSession, dir: String): DataFrame =
+    shipLatency(t(s, dir, "lineitem"), t(s, dir, "orders"))
+      .orderBy("o_orderpriority")
+
+  /** q267's chain over given (lineitem, orders) frames, unordered — the
+    * one copy BucketBench times on both the plain and the bucketed
+    * layout. */
+  private[graft] def shipLatency(li: DataFrame, ord: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r12: same support-histogram conversion as q304 — the rank-r value
     // is min(v : cum(v) >= r), so the exact median/p90 never rank the
     // fact; the windows run on the bounded (priority, days) support
     val days = datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate")))
-    val hist = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))
+    val hist = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_orderpriority"), days.cast("long").as("days"))
       .groupBy(col("o_orderpriority"), col("days"))
       .agg(count(lit(1)).cast("long").as("cnt"))
@@ -4000,7 +3961,6 @@ object Queries {
         min(when(expr("cum >= (9 * n + 9) DIV 10"), col("days")))
           .as("p90_days"),
         max(col("days")).as("max_days"))
-      .orderBy("o_orderpriority")
   }
 
   /** Duplicate-invoice screen (the finance fraud/dedup audit): same
@@ -8382,7 +8342,7 @@ object Queries {
     * reader. */
   private def versionedDocs(s: SparkSession, dir: String): String = {
     val path = rtPath(s, dir, "versioned")
-    oncePerSession(versionedBuilt, s, dir) {
+    oncePerSession(s, path) {
       // UNLIKE the sketch tables (whose same-batch_id re-appends are
       // absorbed by read-side dedup), versioned commits are fresh files
       // each time — so a rebuild on a SURVIVING scratch dir from an
@@ -8401,9 +8361,6 @@ object Queries {
     }
     path
   }
-  private val versionedBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** The profile table RIDING the transactional layer
     * (Sketch.appendColumnProfileVersioned / columnProfileFromVersioned):
@@ -8428,7 +8385,7 @@ object Queries {
     val docs = t(s, dir, "documents")
     val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
     val root = rtPath(s, dir, "vprofidx")
-    oncePerSession(vprofBuilt, s, dir) {
+    oncePerSession(s, root) {
       // keyed commits are idempotent, so a surviving scratch table from
       // an earlier JVM run is simply reused (keys match, appends no-op)
       Sketch.appendColumnProfileVersioned(
@@ -8465,9 +8422,6 @@ object Queries {
         col("est_distinct").as("ndv_now")), Seq("col_name"))
       .orderBy("col_name")
   }
-  private val vprofBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Snapshot-versioned table, HEAD read (etl.Versioned): two appends
     * plus a compaction published as immutable data files behind an
@@ -8524,24 +8478,29 @@ object Queries {
   private val rtSessionIds = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, Integer]())
   private val rtSessionCounter = new java.util.concurrent.atomic.AtomicInteger()
-  private def rtPath(s: SparkSession, dir: String, kind: String): String = {
+  private[graft] def rtPath(s: SparkSession, dir: String, kind: String): String = {
     val sid = rtSessionIds.computeIfAbsent(s,
       _ => Integer.valueOf(rtSessionCounter.incrementAndGet()))
     new java.io.File("target/rt/" + kind + "_" +
       dir.replaceAll("[^A-Za-z0-9.]", "_") + "_s" + sid).getAbsolutePath
   }
 
-  /** Build-once-per-(session, sf dir) latch for the persisted-table
+  /** Tables the persisted-table queries have built, keyed by (session,
+    * [[rtPath]]): the path already encodes the session id, the sf dir and
+    * the table kind, so one map serves every builder. */
+  private val builtTables = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), java.lang.Boolean]()
+
+  /** Build-once-per-(session, table path) latch for the persisted-table
     * queries: purge stopped sessions, then run `build` under
     * computeIfAbsent. CONTRACT (the q112 lesson): `build` must NOT
     * resolve anything through another computeIfAbsent on the SAME map —
-    * and none of these builders touch ivfCache — because nested updates
-    * of a ConcurrentHashMap deadlock or throw when keys share a bin. */
-  private def oncePerSession(map: java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), java.lang.Boolean],
-      s: SparkSession, dir: String)(build: => Unit): Unit = {
-    map.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    map.computeIfAbsent((s, dir), _ => { build; java.lang.Boolean.TRUE })
+    * no builder calls oncePerSession, and none touches ivfCache — because
+    * nested updates of a ConcurrentHashMap deadlock or throw when keys
+    * share a bin. */
+  private def oncePerSession(s: SparkSession, path: String)(build: => Unit): Unit = {
+    builtTables.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    builtTables.computeIfAbsent((s, path), _ => { build; java.lang.Boolean.TRUE })
     ()
   }
 
@@ -8703,7 +8662,7 @@ object Queries {
     val o = t(s, dir, "orders")
     val cents = dec2(col("o_totalprice")) * 100
     val path = rtPath(s, dir, "histq")
-    oncePerSession(histTableBuilt, s, dir) {
+    oncePerSession(s, path) {
       Sketch.appendHistogram(o.filter(col("o_orderkey") % 2 === 0), cents,
         binWidthCents = 100000L, path, batchId = "even")
       Sketch.appendHistogram(o.filter(col("o_orderkey") % 2 === 1), cents,
@@ -8715,9 +8674,6 @@ object Queries {
     Sketch.histogramQuantilesFromTable(s, path, binWidthCents = 100000L,
       quantilesBp = Seq(5000, 9000, 9900))
   }
-  private val histTableBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   /** Contiguous sequence packing (Pack.packSequences): documents packed
     * into 512-token training sequences per source shard — the per-shard
@@ -9331,7 +9287,7 @@ object Queries {
     val d = t(s, dir, "documents").select(col("source"), col("doc_id"),
       TextOps.tokenCount(col("text")).as("n_tokens"))
     val path = rtPath(s, dir, "ghistq")
-    oncePerSession(groupedHistBuilt, s, dir) {
+    oncePerSession(s, path) {
       Robust.appendGroupedHistogram(d.filter(col("doc_id") % 2 === 0),
         "source", "n_tokens", binWidth = 16L, path, batchId = "even")
       Robust.appendGroupedHistogram(d.filter(col("doc_id") % 2 === 1),
@@ -9345,9 +9301,6 @@ object Queries {
       .select(col("g").as("source"), col("quantile_bp"), col("est"))
       .orderBy("source", "quantile_bp")
   }
-  private val groupedHistBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.lang.Boolean]()
 
   // ---------------------------------------------------------------- registry
 

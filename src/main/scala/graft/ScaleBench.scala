@@ -17,11 +17,11 @@ package graft
   * local[32] slack — q286 measured wall exp 0.98 for n²/10 WORK (x100
   * work absorbed into x10 time by idle cores; on a saturated cluster the
   * work exponent is what bills). So each rep also records, via a
-  * SparkListener over task-end events, the rep's shuffle read/write bytes
-  * and executor CPU time; the JSON carries {shuffle_rw_mb, cpu_s} arrays
-  * per scale and exp_cpu / exp_shuffle next to exp_timed. The listener
-  * bus is drained (shim.waitListenerBusEmpty) around every snapshot so a
-  * rep's task events are counted against THAT rep. Shuffle deltas are
+  * tools.WorkMeter, the rep's shuffle read/write bytes and executor CPU
+  * time; the JSON carries {shuffle_rw_mb, cpu_s} arrays per scale and
+  * exp_cpu / exp_shuffle next to exp_timed. The listener bus is drained
+  * (Measure.drain) around every snapshot so a rep's task events are
+  * counted against THAT rep. Shuffle deltas are
   * deterministic per plan; CPU deltas carry JIT/GC noise like wall time —
   * medians over reps, same as wall.
   *
@@ -37,26 +37,10 @@ package graft
   * one-line summary to stdout.
   */
 object ScaleBench {
+  import graft.tools.Measure
+  import graft.tools.Measure.{median, r3}
 
-  /** Cumulative task-level work counters; deltas around an action are that
-    * action's work. AtomicLongs because task-end events arrive on the
-    * listener bus thread while the driver thread reads snapshots. */
-  private final class WorkCounters extends org.apache.spark.scheduler.SparkListener {
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        cpuNs.addAndGet(m.executorCpuTime)
-        ()
-      }
-    }
-    def snapshot: (Long, Long, Long) =
-      (shuffleRead.get(), shuffleWrite.get(), cpuNs.get())
-  }
+  private val tag = "scalebench"
 
   /** One rep's measurement: wall seconds, shuffle read+write MB, CPU s. */
   private final case class Rep(wall: Double, shuffleMb: Double, cpuS: Double)
@@ -79,74 +63,31 @@ object ScaleBench {
       .getOrElse(sys.error("SPARK_GRAFT_BENCH_ONLY is required"))
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
-    var spark = Engine.localSession(cpus, "graft-scalebench")
-    var work = new WorkCounters
-    spark.sparkContext.addSparkListener(work)
-    // one family's executor OOM kills the shared SparkContext; without a
-    // rebuild every later family in the sweep false-fails on "stopped
-    // SparkContext" (this run's q239-at-sf1 lesson). Rebuild between
-    // families so a fatal family poisons only itself.
-    def ensureLive(): Unit =
-      if (spark.sparkContext.isStopped) {
-        System.err.println("[scalebench] SparkContext died — rebuilding session")
-        spark = Engine.localSession(cpus, "graft-scalebench")
-        work = new WorkCounters
-        spark.sparkContext.addSparkListener(work)
-      }
+    val app = "graft-scalebench"
+    var spark = Engine.localSession(cpus, app)
+    // the meter's counters are cumulative across a rebuild: ensureLive
+    // re-registers the same listener on the fresh context (this run's
+    // q239-at-sf1 lesson: one family's OOM must poison only itself)
+    val work = Measure.install(spark)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
 
-    // release/drain touch the live context (unpersist RPC, listener bus);
-    // if an executor OOM killed it mid-family they must not abort the
-    // sweep the family-boundary rebuild exists to protect (ADVICE r11) —
-    // the family's remaining reps read -1/ok=false and the next
-    // ensureLive() rebuilds
-    // NonFatal only: a fatal JVM error (OOM) must propagate to timeOnce's
-    // family guard / the JVM, and an interrupt must keep its status
-    // (ADVICE r12) — the guard here is for the dead-SparkContext RPC case
-    def release(): Unit =
-      try {
-        graft.operators.Checkpoints.releaseQueryScoped(spark); System.gc()
-      } catch {
-        case e: InterruptedException =>
-          Thread.currentThread().interrupt()
-          System.err.println(s"[scalebench] release interrupted: ${e.getMessage}")
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scalebench] release skipped: ${e.getMessage}")
-      }
-    def drain(): Unit =
-      try org.apache.spark.sql.graft.shim.waitListenerBusEmpty(
-        spark.sparkContext, 10000L)
-      catch {
-        case e: InterruptedException =>
-          Thread.currentThread().interrupt()
-          System.err.println(s"[scalebench] drain interrupted: ${e.getMessage}")
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scalebench] drain skipped: ${e.getMessage}")
-      }
     def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
                  dir: String, name: String): Rep = {
-      drain()
-      val (r0, w0, c0) = work.snapshot
+      Measure.drain(spark, tag)
+      val w0 = work.snapshot
       val t0 = System.nanoTime()
       try {
         fn(spark, dir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        drain()
-        val (r1, w1, c1) = work.snapshot
-        Rep(wall, ((r1 - r0) + (w1 - w0)) / 1e6, (c1 - c0) / 1e9)
+        Measure.drain(spark, tag)
+        val w = work.snapshot - w0
+        Rep(wall, w.shuffleMb, w.cpuS)
       } catch { case e: Throwable =>
         System.err.println(s"[scalebench] $name @ $dir FAILED: " +
           s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")
             .linesIterator.nextOption().getOrElse("")}")
         Rep(-1.0, -1.0, -1.0) }
     }
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
     val decade = math.log10(sfB / sfA)
     // exponent over positive medians only; 0-work families (nothing
@@ -156,14 +97,14 @@ object ScaleBench {
     val rows = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only(n) }
       .map { case (name, fn) =>
-        ensureLive()
+        spark = Measure.ensureLive(spark, cpus, app, tag, work)
         // warm both scales first (session caches, codegen), then
         // alternate timed reps A,B,A,B so regime drift hits both evenly
-        val warmA = timeOnce(fn, dirA, name); release()
-        val warmB = timeOnce(fn, dirB, name); release()
+        val warmA = timeOnce(fn, dirA, name); Measure.release(spark, tag)
+        val warmB = timeOnce(fn, dirB, name); Measure.release(spark, tag)
         val timed = (1 to reps).map { _ =>
-          val a = timeOnce(fn, dirA, name); release()
-          val b = timeOnce(fn, dirB, name); release()
+          val a = timeOnce(fn, dirA, name); Measure.release(spark, tag)
+          val b = timeOnce(fn, dirB, name); Measure.release(spark, tag)
           (a, b)
         }
         val (rsA, rsB) = (timed.map(_._1), timed.map(_._2))

@@ -277,13 +277,6 @@ object Dedup {
     when(union === 0, 0.0).otherwise(inter.cast("double") / union.cast("double"))
   }
 
-  /** MinHash signature as a Column (reference form; prefer the exploded
-    * aggregation in [[minhashCandidates]] for bulk work — nested
-    * higher-order functions are interpreted, not codegen'd). */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingleArr, s => xxhash64(s, i))))
-
   /** Portable seeded 60-bit hash: the first 15 hex digits of
     * md5("seed:" || value) parsed as an integer. Computable bit-identically
     * in DuckDB (`CAST('0x' || substr(md5('seed:' || v), 1, 15) AS BIGINT)`),

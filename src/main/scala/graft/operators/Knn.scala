@@ -171,17 +171,11 @@ object Knn {
       when(proj > 0, shiftleft(lit(1L), p)).otherwise(0L)
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  /** Sign-bit bucket id from `numPlanes` random hyperplanes: bit p is 1 iff
-    * dot(vec, plane_p) > 0. Vectors in the same bucket are likely close in
-    * angle (classic SRP-LSH). Column form — for bulk bucketing use
-    * [[withSrpBucket]] (higher-order functions are interpreted per plane). */
-  def srpBucket(vec: Column, numPlanes: Int): Column =
-    srpBits(vec, numPlanes, planeComponent)
-
   /** Bulk SRP bucketing: posexplode the vectors once and compute every
     * plane projection in ONE codegen'd hash aggregation (map-side partial
     * agg, so the shuffle carries one row per vector per partition), then
-    * join the bucket back by id. ~10x the Column form on bulk data. */
+    * join the bucket back by id. ~10x the per-row fold form ([[srpBits]])
+    * on bulk data. */
   def withSrpBucket(df: DataFrame, idCol: String, vecCol: String,
                     numPlanes: Int, out: String = "__bucket"): DataFrame = {
     val exploded = df.select(col(idCol).as("__bid"), posexplode(col(vecCol)))

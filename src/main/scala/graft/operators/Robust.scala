@@ -94,14 +94,16 @@ object Robust {
     * collapsed by max() (exactly one non-NULL row per group per cut). */
   private def groupedQuantileCuts(hist: DataFrame, binWidth: Long,
                                   cuts: Seq[(Int, String)]): DataFrame = {
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__g")).orderBy(col("bin"))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__g"))
+    import org.apache.spark.sql.expressions.Window
+    // one ordered spec for both: n sums the whole group through an
+    // unbounded frame, so cum and n share a single WindowExec
+    val w = Window.partitionBy(col("__g")).orderBy(col("bin"))
     val cum = hist
-      .withColumn("cum", sum(col("cnt")).over(wOrd))
+      .select(col("*"), sum(col("cnt")).over(w).as("cum"),
+        sum(col("cnt")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as("n"))
       .withColumn("cum_before", col("cum") - col("cnt"))
-      .withColumn("n", sum(col("cnt")).over(wAll))
     val ests = cuts.map { case (bp, out) =>
       val r = s"($bp * n + 9999) DIV 10000"
       max(when(col("cum") >= expr(r) && col("cum_before") < expr(r),

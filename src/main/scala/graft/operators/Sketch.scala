@@ -683,25 +683,25 @@ object Sketch {
     // quantile is a conditional column stacked back to rows (NULL rows,
     // i.e. non-cut bins, filtered). Ranks ((bp*n + 9999) DIV 10000) and
     // the integer interpolation are UNCHANGED (q82/q209 hash parity).
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("bin"))
-    val wAll = org.apache.spark.sql.expressions.Window.orderBy(col("bin"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy(col("bin"))
     val cum = hist
-      .withColumn("cum", sum(col("cnt")).over(w))
+      .select(col("*"), sum(col("cnt")).over(w).as("cum"),
+        sum(col("cnt")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as("n"))
       .withColumn("cum_before", col("cum") - col("cnt"))
-      .withColumn("n", sum(col("cnt")).over(wAll))
     // .distinct: the old rank-join form merged duplicate basis points in
     // its groupBy — one output row per distinct bp, preserved here
     val bps = quantilesBp.distinct
-    val withEsts = bps.foldLeft(cum) { (d, bp) =>
+    val ests = bps.map { bp =>
       val r = s"(CAST($bp AS BIGINT) * n + 9999) DIV 10000"
-      d.withColumn(s"__est_$bp",
-        when(col("cum") >= expr(r) && col("cum_before") < expr(r),
-          (col("bin") * binWidthCents +
-            expr(s"$binWidthCents * (($r) - cum_before) DIV cnt")) / 100.0))
+      when(col("cum") >= expr(r) && col("cum_before") < expr(r),
+        (col("bin") * binWidthCents +
+          expr(s"$binWidthCents * (($r) - cum_before) DIV cnt")) / 100.0)
+        .as(s"__est_$bp")
     }
-    withEsts.selectExpr(
+    cum.select(ests: _*).selectExpr(
         s"stack(${bps.size}, " +
           bps.map(bp => s"$bp, __est_$bp").mkString(", ") +
           ") AS (quantile_bp, est)")

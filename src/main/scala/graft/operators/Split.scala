@@ -27,15 +27,6 @@ object Split {
       .otherwise("test")
   }
 
-  /** Split a frame into (train, valid, test) on a key column. */
-  def trainValidTest(df: DataFrame, keyCol: String, trainPct: Int = 80,
-                     validPct: Int = 10): (DataFrame, DataFrame, DataFrame) = {
-    val tagged = df.withColumn("__split", assign(col(keyCol), trainPct, validPct))
-    (tagged.filter(col("__split") === "train").drop("__split"),
-     tagged.filter(col("__split") === "valid").drop("__split"),
-     tagged.filter(col("__split") === "test").drop("__split"))
-  }
-
   /** Deterministic p-percent sample (keeps rows whose bucket < pct). */
   def sample(df: DataFrame, keyCol: String, pct: Int): DataFrame =
     df.filter(bucket(col(keyCol), 100) < pct)

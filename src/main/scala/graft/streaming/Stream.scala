@@ -73,6 +73,13 @@ object Stream {
       .withColumn("is_valid", s.isNull || s === "" || parsed.isNotNull)
   }
 
+  /** An event's duration in whole seconds, 0 when absent or unparseable.
+    * try_cast, not cast: under Spark 4's default ANSI mode a plain cast of
+    * a non-numeric payload (the CSV's literal `NULL`, a typo) throws
+    * CAST_INVALID_INPUT and fails the whole stream instead of adding 0. */
+  private def durationOrZero: Column =
+    coalesce(col("duration_seconds").try_cast("long"), lit(0L))
+
   /** ST-3: per-student rolling metrics as a stateful streaming agg
     * (update output mode). Works unchanged on a batch frame. */
   def studentMetrics(cleaned: DataFrame): DataFrame =
@@ -80,7 +87,7 @@ object Stream {
       .groupBy(col("student_id"))
       .agg(
         count(lit(1)).as("event_count"),
-        sum(coalesce(col("duration_seconds").cast("long"), lit(0L))).as("total_duration"),
+        sum(durationOrZero).as("total_duration"),
         count(when(!col("is_valid"), 1)).as("error_count"))
       .withColumn("error_rate",
         col("error_count").cast("double") / greatest(col("event_count"), lit(1L)))
@@ -250,7 +257,7 @@ object Stream {
     val byStudent = cleaned
       .filter(col("student_id").isNotNull)
       .select(col("student_id"),
-        coalesce(col("duration_seconds").cast("long"), lit(0L)).as("duration"),
+        durationOrZero.as("duration"),
         (!col("is_valid")).cast("long").as("err"))
       .as[(String, Long, Long)]
       .groupByKey(_._1)

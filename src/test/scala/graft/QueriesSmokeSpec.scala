@@ -29,4 +29,44 @@ class QueriesSmokeSpec extends SparkSpec {
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("persisted-table latch: a repeat call writes nothing and returns the same rows") {
+    // every file under the table dir, with size and mtime
+    def listing(root: java.io.File): Set[(String, Long, Long)] =
+      if (root.isDirectory) root.listFiles().toSet.flatMap(listing)
+      else Set((root.getPath, root.length, root.lastModified))
+    for ((name, kind) <- Seq("q210_cms_table" -> "cmsidx", "q211_hll_table" -> "hllidx")) {
+      val table = new java.io.File(Queries.rtPath(spark, dir, kind))
+      val first = Queries.all(name)(spark, dir).collect().toSeq
+      val built = listing(table)
+      assert(built.nonEmpty, s"$name built no table")
+      val again = Queries.all(name)(spark, dir).collect().toSeq
+      assert(listing(table) == built, s"$name rewrote its table")
+      assert(again == first)
+    }
+  }
+
+  test("Probe runs every mode on a caller-owned session") {
+    val name = "q01_pricing_summary"
+    def probe(mode: String): Seq[String] = {
+      val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+      graft.tools.Probe.run(spark, dir, mode, Seq(name), reps = 1, lines += _)
+      lines.toSeq
+    }
+    val time = probe("time")
+    assert(time.exists(_.startsWith(s"[probe] $name warm: ")))
+    assert(time.exists(_.startsWith(s"[probe] $name rep1: ")))
+    assert(time.exists(_.startsWith(s"[probe] $name median=")))
+    val layers = probe("layers")
+    assert(layers.size == 1 && layers.head.contains("build=") &&
+      layers.head.contains("taskCpu=") && layers.head.contains("shuffleWrite="))
+    assert("jobs=(\\d+)".r.findFirstMatchIn(layers.head).exists(_.group(1).toInt > 0))
+    val plan = probe("plan")
+    assert(plan.head.startsWith(s"[probe] $name plan: SMJ="))
+    // shuffle stages exist only once AQE has finalized the plan
+    assert("SQS=(\\d+)".r.findFirstMatchIn(plan.head).exists(_.group(1).toInt > 0))
+    assert(plan(1).contains("HashAggregate"))
+    assert(probe("explain").exists(_.contains("== Physical Plan ==")))
+    assert(!spark.sparkContext.isStopped)
+  }
 }

@@ -114,6 +114,28 @@ class RobustSketchSpec extends SparkSpec {
       assert(hq(bp) == chainRef(cents, 25L, bp) / 100.0, s"q82 bp=$bp")
   }
 
+  test("each quantile chain plans a single WindowExec") {
+    def windows(df: org.apache.spark.sql.DataFrame): Int = {
+      def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+        val kids = p match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            Seq(a.executedPlan)
+          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
+          case other => other.children
+        }
+        (p match {
+          case _: org.apache.spark.sql.execution.window.WindowExec => 1
+          case _ => 0
+        }) + kids.map(walk).sum
+      }
+      walk(graft.tools.Measure.finalPlan(df))
+    }
+    // one grouped chain carries both trim cuts
+    assert(windows(Robust.trimmedStatsSketch(data, "g", "v", binWidth = W)) == 1)
+    assert(windows(graft.operators.Sketch.histogramQuantiles(
+      data, col("v"), 25L, Seq(2500, 5000, 9900))) == 1)
+  }
+
   test("ppl sketch at 1-micro bins: buckets match an independent replay") {
     // with binWidthMicros = 1 every distinct micro-score is its own bin;
     // replicate the ceil-rational thirds cuts over the collected scores

@@ -38,13 +38,19 @@ class StreamingSpec extends SparkSpec {
     val events = Seq(
       ("STU001", "60", "85"), ("STU001", "60", "junk"), ("STU001", "60", "junk"),
       ("STU002", "30", "90"), ("STU002", "30", "91"), ("STU002", "30", "92"),
-      ("STU002", "30", "93"), ("STU002", "30", "94"))
+      ("STU002", "30", "93"), ("STU002", "30", "94"),
+      // non-numeric durations (the CSV's literal NULL, a typo) add 0
+      // under ANSI instead of failing the query
+      ("STU003", "NULL", "80"), ("STU003", "abc", "81"), ("STU003", "45", "82"))
       .toDF("student_id", "duration_seconds", "score")
     val metrics = Stream.studentMetrics(Stream.cleanEvent(events))
     val alerts = Stream.alerts(metrics).select("student_id").collect().map(_.getString(0))
     assert(alerts.toSeq == Seq("STU001"))
     val m1 = metrics.filter(col("student_id") === "STU001").head()
     assert(m1.getAs[Long]("event_count") == 3 && m1.getAs[Long]("error_count") == 2)
+    assert(m1.getAs[Long]("total_duration") == 180)
+    val m3 = metrics.filter(col("student_id") === "STU003").head()
+    assert(m3.getAs[Long]("event_count") == 3 && m3.getAs[Long]("total_duration") == 45)
   }
 
   test("stateful per-student metrics over micro-batches accumulate across batches") {
@@ -59,6 +65,10 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(("STU001", "10", "junk"))
       q.processAllAvailable()
+      // non-numeric durations add 0 and fail no micro-batch under ANSI
+      input.addData(("STU002", "NULL", "70"), ("STU002", "abc", "71"))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty)
       val rows = spark.sql(
         "SELECT * FROM state_test WHERE student_id='STU001' ORDER BY event_count DESC")
         .collect()
@@ -68,6 +78,10 @@ class StreamingSpec extends SparkSpec {
       assert(last.getAs[Long]("total_duration") == 100)
       assert(last.getAs[Long]("error_count") == 2)
       assert(last.getAs[Boolean]("is_anomalous"))
+      val stu2 = spark.sql("SELECT * FROM state_test WHERE student_id='STU002'").collect()
+      assert(stu2.length == 1)
+      assert(stu2.head.getAs[Long]("event_count") == 2)
+      assert(stu2.head.getAs[Long]("total_duration") == 0)
     } finally q.stop()
   }
 
